@@ -14,7 +14,7 @@ writable from one file.
 
 Reads BENCH_r{N-1}.json / BENCH_r{N}.json (driver artifacts: the
 printed JSON line under ``parsed``), plus the optional idle-box pin
-file produced by scripts/r13_spike_pin.py-style sessions
+file of per-query re-measurements, like BENCH_PINS_R13.json
 ({"queries": {q: sec}}).  Writes BENCH_TRIAGE_r{N}.json.
 
 Per-query verdicts, in decision order:

@@ -1,6 +1,6 @@
 """Cross-source contamination matrix over ARBITRARY source counts —
 the multi-word generalization of the ≤64-source bitmask rollup
-(plans/round11_ops.text_contamination_matrix).
+(plans/text.text_contamination_matrix).
 
 The single-word kernel folds every shingle to ONE 64-bit source
 bitmask (`bit_or(1 << idx)`), then runs all pair expansion on the

@@ -10,7 +10,7 @@ on the co-purchase unfold).  The kernel unfolds pair (i, j) from its
 rank via the closed-form inverse of the lexicographic triangular
 numbering, entirely in NumPy.
 
-Shared by ``_copurchase_pairs`` (plans/round4_ops.py) and the
+Shared by ``_copurchase_pairs`` (plans/graph.py) and the
 winnowing inverted-index pair generation (dedup_winnow_pairs); the
 pure-Catalyst twins remain next to each call site as parity oracles.
 """

@@ -8,46 +8,20 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .analytics_ops import ANALYTICS_OPS
-from .curation_ops import CURATION_OPS
-from .llm_ops import LLM_OPS
-from .relational import RELATIONAL
-from .round4_ops import ROUND4_OPS
-from .round5_ops import ROUND5_OPS
-from .round6_ops import ROUND6_OPS
-from .round7_ops import ROUND7_OPS
-from .round8_ops import ROUND8_OPS
-from .round9_ops import ROUND9_OPS
-from .round10_ops import ROUND10_OPS
-from .round11_ops import ROUND11_OPS
-from .round12_ops import ROUND12_OPS
-from .round13_ops import ROUND13_OPS
-from .round14_ops import ROUND14_OPS
-from .round15_ops import ROUND15_OPS
-from .round16_ops import ROUND16_OPS
-from .tpch_pack import TPCH_PACK
-
-# name -> (fn, oracle_sql | None, in_bench)
-CATALOG: dict[str, tuple] = {
-    **RELATIONAL,
-    **LLM_OPS,
-    **CURATION_OPS,
-    **ANALYTICS_OPS,
-    **ROUND4_OPS,
-    **TPCH_PACK,
-    **ROUND5_OPS,
-    **ROUND6_OPS,
-    **ROUND7_OPS,
-    **ROUND8_OPS,
-    **ROUND9_OPS,
-    **ROUND10_OPS,
-    **ROUND11_OPS,
-    **ROUND12_OPS,
-    **ROUND13_OPS,
-    **ROUND14_OPS,
-    **ROUND15_OPS,
-    **ROUND16_OPS,
-}
+# importing the domain modules registers their queries; each module is
+# listed after the modules it imports from, so this is also REGISTRY order
+from . import (  # noqa: F401
+    relational,
+    tpch_pack,
+    events,
+    text,
+    lakehouse,
+    similarity,
+    dedup,
+    graph,
+    quality,
+)
+from .registry import REGISTRY
 
 # The driver's correctness gate checks the FIRST 50 entries of
 # queries() (observed: CORRECTNESS_r{2,3} == the catalog's first 50
@@ -92,12 +66,13 @@ DRIVER_WINDOW: list[str] = [
     "sql_exists_subquery", "sql_scalar_subquery",
 ]
 assert len(DRIVER_WINDOW) == 50 and len(set(DRIVER_WINDOW)) == 50
-assert set(DRIVER_WINDOW) <= set(CATALOG), sorted(
-    set(DRIVER_WINDOW) - set(CATALOG)
+assert set(DRIVER_WINDOW) <= set(REGISTRY), sorted(
+    set(DRIVER_WINDOW) - set(REGISTRY)
 )
-CATALOG = {
-    **{n: CATALOG[n] for n in DRIVER_WINDOW},
-    **{n: v for n, v in CATALOG.items() if n not in DRIVER_WINDOW},
+# name -> (fn, oracle_sql | None, in_bench): the registry, window first
+CATALOG: dict[str, tuple] = {
+    **{n: REGISTRY[n] for n in DRIVER_WINDOW},
+    **REGISTRY,
 }
 
 

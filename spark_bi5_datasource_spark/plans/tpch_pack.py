@@ -18,13 +18,13 @@ scalar subqueries (q2/q17), EXISTS/NOT EXISTS chains (q4/q21), CTE +
 self-aggregation (q11/q15), OR-of-conjunction pushdown (q19),
 NOT IN (q16), nested semi-joins (q20), eight-table join tree (q8/q9)
 — which is what the SQL-interface tier is certifying.  With q1/q3/q5
-(relational.py) and q6/q7/q10/q13/q14/q18/q22 (analytics_ops/
-round4_ops) this completes all 22 TPC-H shapes.
+and q6/q7/q10/q13/q14/q18/q22 (relational.py) this completes all 22
+TPC-H shapes.
 
 Oracle policy: both engines run the SAME SQL text (modulo view
 prefix); money sums ride the scaled-BIGINT idiom so totals are
 order-independent and engine-identical; every LIMIT has a total
-ORDER BY.  One escape hatch: ``_q(..., spark_sql=...)`` substitutes a
+ORDER BY.  One escape hatch: ``_sql_query(..., spark_sql=...)`` substitutes a
 restructured statement on the Spark side ONLY (the oracle always runs
 the original text), used when a Spark plan shape needs restructuring
 (q21's distinct-count rewrite); any such substitute carries the
@@ -39,12 +39,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .fastmoney import spark_fast_sql
+from .registry import query
 from .tables import t
 
-TPCH_PACK: dict[str, tuple] = {}
 
-
-def _q(
+def _sql_query(
     name: str,
     sql: str,
     tables: tuple[str, ...],
@@ -71,8 +70,7 @@ def _q(
 
         fn.__name__ = name
         fn.__doc__ = doc
-        TPCH_PACK[name] = (fn, sql.format(p=""), bench)
-        return fn
+        return query(name, sql.format(p=""), bench)(fn)
 
     return wrap
 
@@ -107,7 +105,7 @@ _Q2_SQL = """
     LIMIT 100
 """
 
-sql_tpch_q2 = _q(
+sql_tpch_q2 = _sql_query(
     "sql_tpch_q2", _Q2_SQL, ("lineitem", "part", "supplier", "nation", "region")
 )(
     """TPC-H q2 shape (min-cost supplier per part within a region)
@@ -136,7 +134,7 @@ _Q4_SQL = """
     GROUP BY o.o_orderpriority
 """
 
-sql_tpch_q4 = _q("sql_tpch_q4", _Q4_SQL, ("orders", "lineitem"))(
+sql_tpch_q4 = _sql_query("sql_tpch_q4", _Q4_SQL, ("orders", "lineitem"))(
     """TPC-H q4 (order-priority checking): correlated EXISTS whose
     predicate references BOTH sides (l_shipdate vs o_orderdate + 60
     days — the fixture-adapted lateness test, since l_commitdate /
@@ -174,6 +172,8 @@ _Q8_SQL = f"""
     ORDER BY o_year
 """
 
+
+@query("sql_tpch_q8", _Q8_SQL.format(p=""), bench=True)
 def sql_tpch_q8(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H q8 (national market share) — hand-shaped join tree.
 
@@ -276,9 +276,6 @@ def sql_tpch_q8(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-TPCH_PACK["sql_tpch_q8"] = (sql_tpch_q8, _Q8_SQL.format(p=""), True)
-
-
 # ------------------------------------------------- q9: product-type profit
 
 _Q9_SQL = f"""
@@ -296,7 +293,7 @@ _Q9_SQL = f"""
     ORDER BY nation, o_year
 """
 
-sql_tpch_q9 = _q(
+sql_tpch_q9 = _sql_query(
     "sql_tpch_q9", _Q9_SQL, ("part", "lineitem", "supplier", "orders", "nation")
 )(
     """TPC-H q9 (product-type profit by nation and year) with supply
@@ -329,7 +326,7 @@ _Q11_SQL = f"""
     ORDER BY part_value DESC, ps_partkey
 """
 
-sql_tpch_q11 = _q(
+sql_tpch_q11 = _sql_query(
     "sql_tpch_q11", _Q11_SQL, ("lineitem", "supplier", "nation", "region")
 )(
     """TPC-H q11 (important stock): per-part value held by one
@@ -362,7 +359,7 @@ _Q12_SQL = """
     ORDER BY ship_class
 """
 
-sql_tpch_q12 = _q("sql_tpch_q12", _Q12_SQL, ("orders", "lineitem"))(
+sql_tpch_q12 = _sql_query("sql_tpch_q12", _Q12_SQL, ("orders", "lineitem"))(
     """TPC-H q12 (shipping-mode priority split) classed on
     l_returnflag (no l_shipmode column) with the late-receipt test
     adapted to ``l_shipdate >= o_orderdate + 30 days``.  The shape
@@ -391,7 +388,7 @@ _Q15_SQL = f"""
     ORDER BY s.s_suppkey
 """
 
-sql_tpch_q15 = _q("sql_tpch_q15", _Q15_SQL, ("lineitem", "supplier"))(
+sql_tpch_q15 = _sql_query("sql_tpch_q15", _Q15_SQL, ("lineitem", "supplier"))(
     """TPC-H q15 (top supplier): the view-self-aggregation shape —
     quarterly revenue per supplier, then the row(s) equal to the
     global max.  Because revenue totals are exact scaled BIGINTs the
@@ -422,7 +419,7 @@ _Q16_SQL = """
     ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
 """
 
-sql_tpch_q16 = _q("sql_tpch_q16", _Q16_SQL, ("lineitem", "part", "supplier"))(
+sql_tpch_q16 = _sql_query("sql_tpch_q16", _Q16_SQL, ("lineitem", "part", "supplier"))(
     """TPC-H q16 (part/supplier relationship count): distinct-count
     of suppliers per (brand, type, size) bucket over the lineitem
     bridge, excluding blacklisted suppliers via NOT IN (negative
@@ -448,7 +445,7 @@ _Q17_SQL = f"""
       )
 """
 
-sql_tpch_q17 = _q("sql_tpch_q17", _Q17_SQL, ("lineitem", "part"))(
+sql_tpch_q17 = _sql_query("sql_tpch_q17", _Q17_SQL, ("lineitem", "part"))(
     """TPC-H q17 (small-quantity-order revenue): the correlated
     scalar AVG subquery against the same fact table — Catalyst
     rewrites it to a per-partkey aggregate joined back to the
@@ -473,7 +470,7 @@ _Q19_SQL = f"""
            AND l.l_quantity BETWEEN 20 AND 30)
 """
 
-sql_tpch_q19 = _q("sql_tpch_q19", _Q19_SQL, ("lineitem", "part"))(
+sql_tpch_q19 = _sql_query("sql_tpch_q19", _Q19_SQL, ("lineitem", "part"))(
     """TPC-H q19 (discounted revenue, disjunctive predicates): three
     OR-ed brand/size/quantity conjunctions spanning both join sides
     (shipmode/container/instruct legs dropped with their columns).
@@ -505,7 +502,7 @@ _Q20_SQL = """
     ORDER BY s.s_name
 """
 
-sql_tpch_q20 = _q(
+sql_tpch_q20 = _sql_query(
     "sql_tpch_q20", _Q20_SQL, ("supplier", "nation", "region", "lineitem", "part")
 )(
     """TPC-H q20 (potential part promotion): nested semi-join chain —
@@ -596,7 +593,7 @@ _Q21_SPARK_SQL = """
     LIMIT 100
 """
 
-sql_tpch_q21 = _q(
+sql_tpch_q21 = _sql_query(
     "sql_tpch_q21",
     _Q21_SQL,
     ("supplier", "lineitem", "orders", "nation", "region"),

@@ -35,6 +35,7 @@ import numpy as np
 __all__ = [
     "BI5_PATH_RE",
     "Bi5FileMeta",
+    "HOUR_US",
     "RECORD_DTYPE",
     "RECORD_SIZE",
     "decode_bi5_bytes",
@@ -71,6 +72,9 @@ RECORD_DTYPE = np.dtype(
 )
 
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+# One file holds one hour of ticks.
+HOUR_US = 3_600_000_000
 
 
 @dataclass(frozen=True)

@@ -55,7 +55,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .bi5_codec import decode_bi5_file, iter_bi5_files, parse_bi5_path
+from .bi5_codec import HOUR_US, decode_bi5_file, iter_bi5_files, parse_bi5_path
 
 __all__ = ["Bi5DataSource", "BI5_SCHEMA"]
 
@@ -70,8 +70,6 @@ BI5_SCHEMA = StructType(
         StructField("bid_volume", DoubleType(), nullable=False),
     ]
 )
-
-HOUR_US = 3_600_000_000
 
 
 @dataclass
@@ -100,6 +98,80 @@ def local_path(path: str) -> str:
     return path
 
 
+def bi5_options(options, check_path: bool = True) -> tuple[str, int, int]:
+    """Validate the options every bi5 reader and writer takes, with the
+    reference's exact messages (DS24:31-50), and return ``(path, digits,
+    january)``.  Readers (``check_path``) also normalize a ``file:`` URI
+    and require the path to exist; the writer creates it."""
+    path = options.get("path")
+    if path is None:
+        raise ValueError("'path' must be specified for BI5 data.")
+    if check_path:
+        path = local_path(path)
+        if not os.path.exists(path):
+            raise ValueError("Invalid path")
+    digits_raw = options.get("digits")
+    if digits_raw is None:
+        raise ValueError("'digits' should be the digits for the currency")
+    digits = int(digits_raw)
+    if digits < 0:
+        raise ValueError("digits cannot be smaller than 0")
+    january = int(options.get("january", "0"))
+    if january < 0 or january > 1:
+        raise ValueError("january can only be 0 or 1")
+    return path, digits, january
+
+
+def _instant_us(value: str | None) -> int | None:
+    """An ISO-8601 instant (naive means UTC) in epoch microseconds."""
+    if not value:
+        return None
+    dt = datetime.fromisoformat(value)
+    if dt.tzinfo is None:
+        dt = dt.replace(tzinfo=timezone.utc)
+    return int(dt.timestamp() * 1_000_000)
+
+
+@dataclass(frozen=True)
+class FilePrune:
+    """Driver-side file pruning on path metadata: a file survives when
+    its ticker is in ``tickers`` and its hour overlaps the inclusive
+    ``[start_us, end_us]`` window (None = unbounded).  Unparseable paths
+    are kept so the executor-side silent-skip policy stays the single
+    authority on dirty files."""
+
+    january: int
+    tickers: set[str] | None = None
+    start_us: int | None = None
+    end_us: int | None = None
+
+    @classmethod
+    def from_options(cls, options, january: int) -> FilePrune:
+        """The ``tickers`` (comma-separated), ``start`` and ``end`` (ISO
+        instants) options.  A malformed instant raises here, when the
+        reader is built, not while files are listed."""
+        tickers = {t.strip() for t in options.get("tickers", "").split(",") if t.strip()}
+        return cls(
+            january,
+            tickers or None,
+            _instant_us(options.get("start")),
+            _instant_us(options.get("end")),
+        )
+
+    def keep(self, fpath: str) -> bool:
+        try:
+            meta = parse_bi5_path(fpath, self.january)
+        except ValueError:
+            return True
+        if self.tickers is not None and meta.ticker not in self.tickers:
+            return False
+        if self.start_us is not None and meta.hour_epoch_us + HOUR_US <= self.start_us:
+            return False
+        if self.end_us is not None and meta.hour_epoch_us > self.end_us:
+            return False
+        return True
+
+
 def _to_epoch_us(value) -> int:
     """Convert a pushed literal (datetime / int micros) to epoch micros."""
     if isinstance(value, datetime):
@@ -112,36 +184,13 @@ def _to_epoch_us(value) -> int:
 class Bi5Reader(DataSourceReader):
     def __init__(self, options) -> None:
         # Mirrors createReader validation incl. exact messages (DS24:31-50).
-        path = options.get("path")
-        if path is None:
-            raise ValueError("'path' must be specified for BI5 data.")
-        path = local_path(path)
-        if not os.path.exists(path):
-            raise ValueError("Invalid path")
-        digits_raw = options.get("digits")
-        if digits_raw is None:
-            raise ValueError("'digits' should be the digits for the currency")
-        digits = int(digits_raw)
-        if digits < 0:
-            raise ValueError("digits cannot be smaller than 0")
-        january = int(options.get("january", "0"))
-        if january < 0 or january > 1:
-            raise ValueError("january can only be 0 or 1")
+        self.path, self.digits, self.january = bi5_options(options)
         partitioning = options.get("partitioning", "file")
         if partitioning not in ("file", "subdir"):
             raise ValueError("partitioning must be 'file' or 'subdir'")
-
-        self.path = path
-        self.digits = digits
-        self.january = january
         self.partitioning = partitioning
-        # Extra driver-side prune knobs (comma-separated tickers, ISO
-        # instants) usable even without a WHERE clause.
-        self.opt_tickers = {
-            t.strip() for t in options.get("tickers", "").split(",") if t.strip()
-        } or None
-        self.opt_start = options.get("start")
-        self.opt_end = options.get("end")
+        # Extra driver-side prune knobs usable even without a WHERE clause.
+        self.opt_prune = FilePrune.from_options(options, self.january)
         # Populated by pushFilters.
         self._pushed_tickers: set[str] | None = None
         self._pushed_ts_min_us: int | None = None  # inclusive
@@ -181,36 +230,20 @@ class Bi5Reader(DataSourceReader):
         else:
             self._pushed_tickers &= tickers
 
-    def _keep_file(self, fpath: str) -> bool:
-        """Driver-side prune: drop files whose path metadata can't match
-        the pushed/option filters.  Unparseable paths are kept so the
-        executor-side silent-skip policy stays the single authority."""
-        try:
-            meta = parse_bi5_path(fpath, self.january)
-        except ValueError:
-            return True
+    def _prune(self) -> FilePrune:
+        """The pushed filters intersected with the prune options."""
+        opt = self.opt_prune
         tickers = self._pushed_tickers
-        if self.opt_tickers is not None:
-            tickers = (tickers & self.opt_tickers) if tickers is not None else self.opt_tickers
-        if tickers is not None and meta.ticker not in tickers:
-            return False
-        lo_us, hi_us = meta.hour_epoch_us, meta.hour_epoch_us + HOUR_US
-        ts_min, ts_max = self._pushed_ts_min_us, self._pushed_ts_max_us
-        if self.opt_start:
-            ts_min = max(
-                ts_min if ts_min is not None else -(1 << 62),
-                _iso_to_us(self.opt_start),
-            )
-        if self.opt_end:
-            ts_max = min(
-                ts_max if ts_max is not None else (1 << 62),
-                _iso_to_us(self.opt_end),
-            )
-        if ts_min is not None and lo_us + HOUR_US <= ts_min:
-            return False
-        if ts_max is not None and lo_us > ts_max:
-            return False
-        return True
+        if opt.tickers is not None:
+            tickers = (tickers & opt.tickers) if tickers is not None else opt.tickers
+        starts = [u for u in (self._pushed_ts_min_us, opt.start_us) if u is not None]
+        ends = [u for u in (self._pushed_ts_max_us, opt.end_us) if u is not None]
+        return FilePrune(
+            self.january,
+            tickers,
+            max(starts) if starts else None,
+            min(ends) if ends else None,
+        )
 
     # -- planning ------------------------------------------------------
     def partitions(self) -> Sequence[Bi5Partition]:
@@ -227,7 +260,8 @@ class Bi5Reader(DataSourceReader):
                 parts = [Bi5Partition(files=(self.path,), walk=True)]
         else:
             # Scale path: one partition per file, pruned by pushed filters.
-            files = [f for f in iter_bi5_files(self.path) if self._keep_file(f)]
+            prune = self._prune()
+            files = [f for f in iter_bi5_files(self.path) if prune.keep(f)]
             parts = [Bi5Partition(files=(f,), walk=False) for f in files]
         # Zero partitions is legal but loses schema-only queries' task
         # metrics parity; keep an empty partition so count()==0 still
@@ -249,13 +283,6 @@ class Bi5Reader(DataSourceReader):
             if cols is None or len(cols["ts_us"]) == 0:
                 continue  # silent skip (A10, DS24:149-186)
             yield ticks_record_batch(cols)
-
-
-def _iso_to_us(value: str) -> int:
-    dt = datetime.fromisoformat(value)
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return int(dt.timestamp() * 1_000_000)
 
 
 class Bi5DataSource(DataSource):

@@ -36,11 +36,10 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql.datasource import DataSourceArrowWriter, WriterCommitMessage
 
-from .bi5_codec import RECORD_DTYPE
+from .bi5_codec import HOUR_US, RECORD_DTYPE
+from .bi5_datasource import bi5_options
 
 __all__ = ["Bi5Writer", "write_bi5_tree"]
-
-_HOUR_US = 3_600_000_000
 
 
 @dataclass
@@ -50,18 +49,7 @@ class Bi5CommitMessage(WriterCommitMessage):
 
 class Bi5Writer(DataSourceArrowWriter):
     def __init__(self, options) -> None:
-        path = options.get("path")
-        if path is None:
-            raise ValueError("'path' must be specified for BI5 data.")
-        digits_raw = options.get("digits")
-        if digits_raw is None:
-            raise ValueError("'digits' should be the digits for the currency")
-        self.digits = int(digits_raw)
-        if self.digits < 0:
-            raise ValueError("digits cannot be smaller than 0")
-        self.january = int(options.get("january", "0"))
-        if self.january < 0 or self.january > 1:
-            raise ValueError("january can only be 0 or 1")
+        self.path, self.digits, self.january = bi5_options(options, check_path=False)
         # LZMA effort: decoders accept any preset; on tick payloads
         # preset 1 measured 7x faster than the library default (6) AND
         # slightly smaller (repetitive fixed-width records), so it is
@@ -69,7 +57,6 @@ class Bi5Writer(DataSourceArrowWriter):
         self.preset = int(options.get("compression.preset", "1"))
         if self.preset < 0 or self.preset > 9:
             raise ValueError("compression.preset must be 0..9")
-        self.path = path
 
     @staticmethod
     def _epoch_us(ts_col) -> np.ndarray:
@@ -118,7 +105,7 @@ class Bi5Writer(DataSourceArrowWriter):
                         f"(got {col[vc].null_count} nulls in a batch)"
                     )
             ts_us = self._epoch_us(col["ts"])
-            hour_us = (ts_us // _HOUR_US) * _HOUR_US
+            hour_us = (ts_us // HOUR_US) * HOUR_US
             chunks.append(
                 pd.DataFrame(
                     {

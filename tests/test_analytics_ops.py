@@ -160,7 +160,7 @@ class TestCosineRadius:
 
 class TestRepetitionStats:
     def _run(self, spark, texts):
-        from spark_bi5_datasource_spark.plans.analytics_ops import (
+        from spark_bi5_datasource_spark.plans.text import (
             text_repetition_stats,
         )
         import os
@@ -203,7 +203,7 @@ class TestRepetitionStats:
 
 class TestActiveUsers:
     def test_wau_is_trailing_seven_days(self, spark):
-        from spark_bi5_datasource_spark.plans.analytics_ops import (
+        from spark_bi5_datasource_spark.plans.events import (
             events_active_users,
         )
         import os

@@ -61,6 +61,52 @@ class TestOptionValidation:
             read_bi5(spark, bi5_tree, digits=DIGITS_EUR, january=january).count()
 
 
+class TestPruneOptions:
+    """``start``/``end`` are parsed once, when a reader is built, and the
+    batch and streaming readers prune with the same predicate."""
+
+    @staticmethod
+    def readers():
+        from spark_bi5_datasource_spark.sources.bi5_datasource import Bi5Reader
+        from spark_bi5_datasource_spark.streaming.bi5_stream import Bi5StreamReader
+
+        return Bi5Reader, Bi5StreamReader
+
+    @pytest.mark.parametrize("key", ["start", "end"])
+    def test_malformed_instant_raises_at_construction(self, bi5_tree, tmp_path, key):
+        # a tree with parseable files, and one whose only .bi5 file
+        # has no <ticker>/<YYYY>/<mm>/<dd>/<hh> path to parse
+        odd = tmp_path / "odd"
+        odd.mkdir()
+        (odd / "notes.bi5").write_bytes(b"")
+        for path in (bi5_tree, str(odd)):
+            for reader in self.readers():
+                with pytest.raises(ValueError, match="Invalid isoformat string"):
+                    reader({"path": path, "digits": "5", key: "not-a-date"})
+
+    def test_malformed_start_fails_the_batch_scan(self, spark, tmp_path):
+        odd = tmp_path / "odd"
+        odd.mkdir()
+        (odd / "notes.bi5").write_bytes(b"")
+        with pytest.raises(Exception, match="Invalid isoformat string"):
+            read_bi5(spark, str(odd), digits=5, start="not-a-date").count()
+
+    def test_batch_and_stream_prune_alike(self, bi5_tree):
+        opts = {
+            "path": bi5_tree,
+            "digits": "5",
+            "tickers": "EURUSD",
+            "start": "2019-12-31T15:30:00",
+            "end": "2020-12-31",
+        }
+        batch, stream = self.readers()
+        planned = sorted(f for p in batch(opts).partitions() for f in p.files)
+        listed = stream(opts).latestOffset()["files"]
+        # the EURUSD 15h and April files; 01h ends before start, USDJPY is out
+        assert planned == listed
+        assert [os.path.basename(f) for f in listed] == ["15h_ticks.bi5", "00h_ticks.bi5"]
+
+
 # ---- dirty-input tolerance (T:178-186) ----
 
 

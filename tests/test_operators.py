@@ -500,7 +500,7 @@ class TestCopurchaseKernel:
         the singleton/empty degenerate baskets."""
         import random
 
-        from spark_bi5_datasource_spark.plans.round4_ops import (
+        from spark_bi5_datasource_spark.plans.graph import (
             _copurchase_pairs,
             _copurchase_pairs_hof,
         )
@@ -533,7 +533,7 @@ class TestCopurchaseKernel:
             PAIR_PREFILTER_CONF,
             prefilter_min2,
         )
-        from spark_bi5_datasource_spark.plans.round4_ops import (
+        from spark_bi5_datasource_spark.plans.graph import (
             _copurchase_pairs,
         )
 
@@ -1891,7 +1891,7 @@ class TestContaminationMatrixMultiword:
         from spark_bi5_datasource_spark.operators.contamination import (
             contamination_matrix,
         )
-        from spark_bi5_datasource_spark.plans.round11_ops import (
+        from spark_bi5_datasource_spark.plans.text import (
             text_contamination_matrix,
         )
         from tests.conftest import TESTDATA_SF, has_testdata
@@ -2737,7 +2737,7 @@ class TestTableDiff:
 
 class TestDeltaDedup:
     """minhash_delta_dedup: increment-vs-corpus near-dedup that never
-    pairs the corpus with itself (plans/round12_ops.py twin)."""
+    pairs the corpus with itself (plans/dedup.py twin)."""
 
     @pytest.fixture()
     def crawl(self, spark):
@@ -2803,7 +2803,7 @@ class TestAnnRecallMonitor:
         """IVF recall must not DECREASE with wider probes (a superset
         of cells can only add candidates), every ppm is in [0, 1e6],
         and all six (tier, param) rows exist even at zero recall."""
-        from spark_bi5_datasource_spark.plans.round12_ops import (
+        from spark_bi5_datasource_spark.plans.similarity import (
             sim_ann_recall_monitor,
         )
 
@@ -2826,7 +2826,7 @@ class TestStickinessAndEncoding:
         days."""
         from tests.conftest import TESTDATA_SF
 
-        from spark_bi5_datasource_spark.plans.round12_ops import (
+        from spark_bi5_datasource_spark.plans.events import (
             events_stickiness_dau_mau,
         )
 
@@ -2847,7 +2847,7 @@ class TestStickinessAndEncoding:
     def test_encoding_audit_detects_planted_bytes(self, spark):
         """Non-ASCII, U+FFFD, tabs and newlines planted in a tiny
         frame must be counted exactly."""
-        from spark_bi5_datasource_spark.plans.round12_ops import (
+        from spark_bi5_datasource_spark.plans.text import (
             text_encoding_audit,
         )
 
@@ -2878,7 +2878,7 @@ class TestStickinessAndEncoding:
 
 class TestBandIndexMaintenance:
     """operators/band_index.py: the stored per-crawl LSH index and its
-    MERGE-style maintenance (plans/round13_ops.py twin)."""
+    MERGE-style maintenance (plans/dedup.py twin)."""
 
     @pytest.fixture()
     def corpus_frames(self, spark):
@@ -2993,7 +2993,7 @@ class TestBandIndexMaintenance:
     def test_merge_entry_cap_nonbinding_at_oracle_scales(
         self, spark, sf_dir
     ):
-        """GATE for plans/round13_ops.dedup_band_index_merge: the
+        """GATE for plans/dedup.dedup_band_index_merge: the
         shipped entry probes with ``max_bucket=200`` while its oracle
         SQL is the exact uncapped twin, so Spark-vs-oracle equality
         holds only while the cap never binds.  The bucket key is an
@@ -3044,7 +3044,7 @@ class TestBandIndexMaintenance:
         )
 
     def test_delta_entry_stored_posture_equals_inline(self, spark):
-        """POSTURE pin for plans/round12_ops.dedup_incremental_delta
+        """POSTURE pin for plans/dedup.dedup_incremental_delta
         (r11 flip): the shipped entry probes the warehouse-persisted
         fingerprint-keyed corpus index; this re-runs the same split
         with the inline-derived index and asserts exact row equality,
@@ -3053,7 +3053,7 @@ class TestBandIndexMaintenance:
         from spark_bi5_datasource_spark.operators.dedup import (
             minhash_delta_dedup,
         )
-        from spark_bi5_datasource_spark.plans.round12_ops import (
+        from spark_bi5_datasource_spark.plans.dedup import (
             dedup_incremental_delta,
         )
 
@@ -3080,7 +3080,7 @@ class TestBandIndexMaintenance:
 
 
 class TestCorpusBuildProduction:
-    """plans/round16_ops.corpus_build_production: the minhash-banded
+    """plans/text.corpus_build_production: the minhash-banded
     corpus build must equal the exact-bar snapshot at every oracle
     fixture scale — the dedup_minhash equality discipline applied to
     the composed pipeline (both entries share stages 3-5 by
@@ -3094,10 +3094,10 @@ class TestCorpusBuildProduction:
     def test_corpus_production_equals_snapshot(self, spark, sf_dir):
         if not os.path.isdir(sf_dir):
             pytest.skip(f"no fixture at {sf_dir}")
-        from spark_bi5_datasource_spark.plans.round15_ops import (
+        from spark_bi5_datasource_spark.plans.text import (
             corpus_build_snapshot,
         )
-        from spark_bi5_datasource_spark.plans.round16_ops import (
+        from spark_bi5_datasource_spark.plans.text import (
             corpus_build_production,
         )
 
@@ -3111,7 +3111,7 @@ class TestCorpusBuildProduction:
 
 
 class TestMediaPhashDedup:
-    """Perceptual-hash dedup over binary media (plans/round13_ops.py
+    """Perceptual-hash dedup over binary media (plans/dedup.py
     twin): dHash kernel + simhash-band reuse, pinned on images the
     catalog synthesizer did NOT produce."""
 
@@ -3175,7 +3175,7 @@ class TestMediaPhashDedup:
 
 
 class TestAudioFingerprintDedup:
-    """Audio-fingerprint dedup (plans/round13_ops.py twin): real WAV
+    """Audio-fingerprint dedup (plans/dedup.py twin): real WAV
     payloads the catalog synthesizer did NOT produce — different
     sample rates, lengths, and codecs collapsing to one fingerprint."""
 
@@ -3237,7 +3237,7 @@ class TestAudioFingerprintDedup:
 
 class TestBandIndexHealth:
     """band_index_stats + the portable index twin
-    (plans/round13_ops.py dedup_band_index_health)."""
+    (plans/dedup.py dedup_band_index_health)."""
 
     def test_stats_exact_on_planted_index(self, spark):
         rows = [(i, 0, "a") for i in range(3)] + [
@@ -3308,7 +3308,7 @@ class TestBandIndexHealth:
 
 
 class TestVideoFingerprintDedup:
-    """Temporal video dedup (plans/round14_ops.py twin): AVI synth →
+    """Temporal video dedup (plans/dedup.py twin): AVI synth →
     real container walk → per-frame dHash → per-bit majority, pinned
     on videos the catalog synthesizer did NOT produce."""
 
@@ -3428,7 +3428,7 @@ class TestVideoFingerprintDedup:
 
 class TestIvfIndexMaintenance:
     """operators/ann_index.py: the stored IVF inverted file and its
-    MERGE-style maintenance (plans/round14_ops.py twin)."""
+    MERGE-style maintenance (plans/similarity.py twin)."""
 
     @pytest.fixture()
     def vec_frames(self, spark):

@@ -597,12 +597,12 @@ def test_cobucketed_write_path_exchange_free_join(spark, tmp_path, monkeypatch):
     no sort between them — the doc⋈emb twin of the lineitem⋈orders
     bucket contract."""
     from spark_bi5_datasource_spark import plans
-    from spark_bi5_datasource_spark.plans import round13_ops
+    from spark_bi5_datasource_spark.plans import lakehouse
 
     # isolate the warehouse artifact under tmp_path so the test never
     # reuses (or pollutes) the repo-level cache
     monkeypatch.setattr(
-        round13_ops, "_warehouse",
+        lakehouse, "_warehouse",
         lambda sf, leaf: str(tmp_path / leaf),
     )
     # the fixture-scale embeddings side fits the auto-broadcast

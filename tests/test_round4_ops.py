@@ -100,7 +100,7 @@ class TestSentenceStats:
         import os
         import tempfile
 
-        from spark_bi5_datasource_spark.plans.round4_ops import (
+        from spark_bi5_datasource_spark.plans.text import (
             text_sentence_stats,
         )
 
@@ -204,7 +204,7 @@ class TestIntervalOverlapJoin:
 
 class TestRollingCorr:
     def _corr(self, spark, vals):
-        from spark_bi5_datasource_spark.plans.round4_ops import (
+        from spark_bi5_datasource_spark.plans.events import (
             window_rolling_corr,
         )
         import datetime as dt
@@ -245,7 +245,7 @@ class TestEwma:
         import os
         import tempfile
 
-        from spark_bi5_datasource_spark.plans.round4_ops import window_ewma
+        from spark_bi5_datasource_spark.plans.events import window_ewma
 
         rows = [
             (i, dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i), 1, "t", v, "{}")
@@ -285,7 +285,7 @@ class TestTriangleCount:
         import os
         import tempfile
 
-        from spark_bi5_datasource_spark.plans.round4_ops import (
+        from spark_bi5_datasource_spark.plans.graph import (
             graph_triangle_count,
         )
 
@@ -318,7 +318,7 @@ class TestSpanDedup:
         import os
         import tempfile
 
-        from spark_bi5_datasource_spark.plans.round4_ops import text_span_dedup
+        from spark_bi5_datasource_spark.plans.text import text_span_dedup
 
         words = [f"w{i}" for i in range(24)]  # 24 tokens -> spans at 0,4,8,12
         shared = " ".join(words)
@@ -353,7 +353,7 @@ class TestSpanDedup:
 
 class TestSampleMixture:
     def test_rates_and_determinism(self, spark):
-        from spark_bi5_datasource_spark.plans.round4_ops import sample_mixture
+        from spark_bi5_datasource_spark.plans.quality import sample_mixture
 
         a = sample_mixture(spark, TESTDATA_SF).collect()
         b = sample_mixture(spark, TESTDATA_SF).collect()
@@ -392,7 +392,7 @@ class TestCumeUsers:
         import os
         import tempfile
 
-        from spark_bi5_datasource_spark.plans.round4_ops import (
+        from spark_bi5_datasource_spark.plans.events import (
             events_cume_users,
         )
 
@@ -460,13 +460,13 @@ class TestHllSketchPipeline:
 
 class TestSqlPackPlans:
     def test_q18_semi_join_decorrelation(self, spark):
-        from spark_bi5_datasource_spark.plans.round4_ops import sql_tpch_q18
+        from spark_bi5_datasource_spark.plans.relational import sql_tpch_q18
 
         plan = sql_tpch_q18(spark, TESTDATA_SF)._jdf.queryExecution().toString()
         assert "LeftSemi" in plan
 
     def test_q22_anti_join_decorrelation(self, spark):
-        from spark_bi5_datasource_spark.plans.round4_ops import sql_tpch_q22
+        from spark_bi5_datasource_spark.plans.relational import sql_tpch_q22
 
         plan = sql_tpch_q22(spark, TESTDATA_SF)._jdf.queryExecution().toString()
         assert "LeftAnti" in plan
