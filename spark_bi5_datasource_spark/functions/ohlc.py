@@ -31,7 +31,6 @@ def ohlc_bars(
     volume_col: str | None = "bid_volume",
     by: Sequence[str] = ("ticker",),
     extra_aggs: Sequence[F.Column] = (),
-    integer_buckets: bool = True,
 ) -> DataFrame:
     """Open/high/low/close (+volume) bars per key per time bucket.
 
@@ -40,14 +39,13 @@ def ohlc_bars(
     need a sort.  ``extra_aggs`` lets callers ride additional
     aliased aggregates on the same exchange (e.g. a value sum).
 
-    ``integer_buckets`` (default) computes the tumbling bucket as
-    epoch-aligned int64 arithmetic on ``unix_micros`` — measured 30 %
-    faster than ``F.window``/``date_trunc`` at the x1000 tier, whose
-    per-row interval machinery is pure overhead for fixed-width
-    buckets (epoch alignment is identical).  Streaming inputs always
-    take the ``window()`` path regardless of the flag: the engine
-    recognizes only that construct as event-time, so watermark state
-    eviction (and append-mode output) depends on it."""
+    A batch input computes the tumbling bucket as epoch-aligned int64
+    arithmetic on ``unix_micros`` — measured 30 % faster than
+    ``F.window``/``date_trunc`` at the x1000 tier, whose per-row
+    interval machinery is pure overhead for fixed-width buckets (epoch
+    alignment is identical).  A streaming input takes the ``window()``
+    path: the engine recognizes only that construct as event-time, so
+    watermark state eviction (and append-mode output) depends on it."""
     aggs = [
         F.min_by(price_col, ts_col).alias("open"),
         F.max(price_col).alias("high"),
@@ -58,7 +56,7 @@ def ohlc_bars(
     if volume_col is not None:
         aggs.append(F.sum(volume_col).alias("volume"))
     aggs.extend(extra_aggs)
-    if integer_buckets and not df.isStreaming:
+    if not df.isStreaming:
         n = _bucket_micros(duration)
         um = F.unix_micros(F.col(ts_col))
         bucket = (um - F.pmod(um, F.lit(n))).alias("_bucket")

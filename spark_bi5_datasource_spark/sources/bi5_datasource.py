@@ -33,7 +33,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 from datetime import datetime, timezone
-from typing import Iterator, Sequence
+from typing import Iterable, Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -55,7 +55,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .bi5_codec import HOUR_US, decode_bi5_file, iter_bi5_files, parse_bi5_path
+from .bi5_codec import (
+    HOUR_US,
+    decode_bi5_file,
+    iter_bi5_files,
+    parse_bi5_path,
+    ticks_record_batch,
+)
 
 __all__ = ["Bi5DataSource", "BI5_SCHEMA"]
 
@@ -74,11 +80,21 @@ BI5_SCHEMA = StructType(
 
 @dataclass
 class Bi5Partition(InputPartition):
-    """One scan task: a list of files (file mode → length 1; subdir
-    compat mode → a subtree root to walk at read time)."""
+    """One scan task: the ``.bi5`` files it decodes (file mode → one;
+    subdir mode → every kept file under one top-level entry)."""
 
     files: tuple[str, ...]
-    walk: bool  # True → entries are roots to walk (subdir compat mode)
+
+
+def read_files(files: Iterable[str], digits: int, january: int) -> Iterator:
+    """Decode ``files`` into Arrow RecordBatches, silently skipping the
+    ones that yield no rows (A10, DS24:149-186) — the one decode loop of
+    the batch and streaming readers."""
+    for fpath in files:
+        cols = decode_bi5_file(fpath, digits, january)
+        if cols is None or len(cols["ts_us"]) == 0:
+            continue
+        yield ticks_record_batch(cols)
 
 
 def local_path(path: str) -> str:
@@ -122,14 +138,19 @@ def bi5_options(options, check_path: bool = True) -> tuple[str, int, int]:
     return path, digits, january
 
 
-def _instant_us(value: str | None) -> int | None:
-    """An ISO-8601 instant (naive means UTC) in epoch microseconds."""
-    if not value:
+def _instant_us(value: str | datetime | int | None) -> int | None:
+    """An instant in epoch microseconds: an ISO-8601 string or a
+    ``datetime`` (naive means UTC), or an int already in microseconds.
+    ``None`` and the empty string mean unbounded."""
+    if value is None or value == "":
         return None
-    dt = datetime.fromisoformat(value)
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return int(dt.timestamp() * 1_000_000)
+    if isinstance(value, str):
+        value = datetime.fromisoformat(value)
+    if isinstance(value, datetime):
+        if value.tzinfo is None:
+            value = value.replace(tzinfo=timezone.utc)
+        return int(value.timestamp() * 1_000_000)
+    return int(value)
 
 
 @dataclass(frozen=True)
@@ -151,11 +172,25 @@ class FilePrune:
         instants) options.  A malformed instant raises here, when the
         reader is built, not while files are listed."""
         tickers = {t.strip() for t in options.get("tickers", "").split(",") if t.strip()}
-        return cls(
-            january,
-            tickers or None,
-            _instant_us(options.get("start")),
-            _instant_us(options.get("end")),
+        return cls(january).narrow(tickers or None, options.get("start"), options.get("end"))
+
+    def narrow(
+        self,
+        tickers: Iterable[str] | None = None,
+        start: str | datetime | int | None = None,
+        end: str | datetime | int | None = None,
+    ) -> FilePrune:
+        """This prune restricted further: ``tickers`` intersect with the
+        kept set, the later ``start`` and the earlier ``end`` bound win."""
+        if tickers is not None:
+            tickers = set(tickers) if self.tickers is None else self.tickers & set(tickers)
+        starts = [u for u in (self.start_us, _instant_us(start)) if u is not None]
+        ends = [u for u in (self.end_us, _instant_us(end)) if u is not None]
+        return FilePrune(
+            self.january,
+            self.tickers if tickers is None else tickers,
+            max(starts, default=None),
+            min(ends, default=None),
         )
 
     def keep(self, fpath: str) -> bool:
@@ -171,14 +206,9 @@ class FilePrune:
             return False
         return True
 
-
-def _to_epoch_us(value) -> int:
-    """Convert a pushed literal (datetime / int micros) to epoch micros."""
-    if isinstance(value, datetime):
-        if value.tzinfo is None:
-            value = value.replace(tzinfo=timezone.utc)
-        return int(value.timestamp() * 1_000_000)
-    return int(value)
+    def files(self, root: str) -> list[str]:
+        """The ``.bi5`` files under ``root`` that this prune keeps."""
+        return [f for f in iter_bi5_files(root) if self.keep(f)]
 
 
 class Bi5Reader(DataSourceReader):
@@ -189,12 +219,8 @@ class Bi5Reader(DataSourceReader):
         if partitioning not in ("file", "subdir"):
             raise ValueError("partitioning must be 'file' or 'subdir'")
         self.partitioning = partitioning
-        # Extra driver-side prune knobs usable even without a WHERE clause.
-        self.opt_prune = FilePrune.from_options(options, self.january)
-        # Populated by pushFilters.
-        self._pushed_tickers: set[str] | None = None
-        self._pushed_ts_min_us: int | None = None  # inclusive
-        self._pushed_ts_max_us: int | None = None  # inclusive
+        # The tickers/start/end options; pushFilters narrows it further.
+        self.prune = FilePrune.from_options(options, self.january)
 
     # -- filter pushdown (Spark 4.1) ----------------------------------
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -208,89 +234,52 @@ class Bi5Reader(DataSourceReader):
         for f in filters:
             try:
                 if isinstance(f, EqualTo) and f.attribute == ("ticker",):
-                    self._intersect_tickers({f.value})
+                    self.prune = self.prune.narrow(tickers={f.value})
                 elif isinstance(f, In) and f.attribute == ("ticker",):
                     # In's dataclass field is `value` (a tuple of literals)
-                    self._intersect_tickers(set(f.value))
+                    self.prune = self.prune.narrow(tickers=f.value)
                 elif isinstance(f, (GreaterThan, GreaterThanOrEqual)) and f.attribute == ("ts",):
-                    lo = _to_epoch_us(f.value)
-                    if self._pushed_ts_min_us is None or lo > self._pushed_ts_min_us:
-                        self._pushed_ts_min_us = lo
+                    self.prune = self.prune.narrow(start=f.value)
                 elif isinstance(f, (LessThan, LessThanOrEqual)) and f.attribute == ("ts",):
-                    hi = _to_epoch_us(f.value)
-                    if self._pushed_ts_max_us is None or hi < self._pushed_ts_max_us:
-                        self._pushed_ts_max_us = hi
+                    self.prune = self.prune.narrow(end=f.value)
             except Exception:
                 pass  # never let pruning break planning
         return iter(filters)  # Spark re-applies everything (exact semantics)
-
-    def _intersect_tickers(self, tickers: set[str]) -> None:
-        if self._pushed_tickers is None:
-            self._pushed_tickers = set(tickers)
-        else:
-            self._pushed_tickers &= tickers
-
-    def _prune(self) -> FilePrune:
-        """The pushed filters intersected with the prune options."""
-        opt = self.opt_prune
-        tickers = self._pushed_tickers
-        if opt.tickers is not None:
-            tickers = (tickers & opt.tickers) if tickers is not None else opt.tickers
-        starts = [u for u in (self._pushed_ts_min_us, opt.start_us) if u is not None]
-        ends = [u for u in (self._pushed_ts_max_us, opt.end_us) if u is not None]
-        return FilePrune(
-            self.january,
-            tickers,
-            max(starts) if starts else None,
-            min(ends) if ends else None,
-        )
 
     # -- planning ------------------------------------------------------
     def partitions(self) -> Sequence[Bi5Partition]:
         if self.partitioning == "subdir":
             # Reference parity (DS24:68-79): one partition per immediate
-            # directory entry; single file → one partition.
+            # directory entry, even one with no kept file; single file →
+            # one partition.
             if os.path.isdir(self.path):
-                entries = sorted(os.listdir(self.path))
-                parts = [
-                    Bi5Partition(files=(os.path.join(self.path, e),), walk=True)
-                    for e in entries
-                ]
+                roots = [os.path.join(self.path, e) for e in sorted(os.listdir(self.path))]
             else:
-                parts = [Bi5Partition(files=(self.path,), walk=True)]
+                roots = [self.path]
+            parts = [Bi5Partition(tuple(self.prune.files(r))) for r in roots]
         else:
-            # Scale path: one partition per file, pruned by pushed filters.
-            prune = self._prune()
-            files = [f for f in iter_bi5_files(self.path) if prune.keep(f)]
-            parts = [Bi5Partition(files=(f,), walk=False) for f in files]
+            # Scale path: one partition per kept file.
+            parts = [Bi5Partition((f,)) for f in self.prune.files(self.path)]
         # Zero partitions is legal but loses schema-only queries' task
         # metrics parity; keep an empty partition so count()==0 still
         # runs a (no-op) task like the reference's empty-walk reader.
-        return parts or [Bi5Partition(files=(), walk=False)]
+        return parts or [Bi5Partition(())]
 
     # -- execution -----------------------------------------------------
     def read(self, partition: Bi5Partition):
-        from .bi5_codec import ticks_record_batch
-
-        if partition.walk:
-            files: Iterator[str] = (
-                f for root in partition.files for f in iter_bi5_files(root)
-            )
-        else:
-            files = iter(partition.files)
-        for fpath in files:
-            cols = decode_bi5_file(fpath, self.digits, self.january)
-            if cols is None or len(cols["ts_us"]) == 0:
-                continue  # silent skip (A10, DS24:149-186)
-            yield ticks_record_batch(cols)
+        return read_files(partition.files, self.digits, self.january)
 
 
 class Bi5DataSource(DataSource):
     """``spark.read.format("bi5")`` — Dukascopy tick files.
 
     Options: ``digits`` (required, int ≥ 0), ``january`` (0/1, default
-    0), ``partitioning`` (``file``/``subdir``), ``tickers``, ``start``,
-    ``end`` (driver-side prune hints).
+    0), ``partitioning`` (``file``, the default: one partition per file;
+    ``subdir``: one per top-level directory entry, as the reference),
+    and the driver-side prune options ``tickers`` (comma-separated),
+    ``start`` and ``end`` (inclusive ISO-8601 instants, naive = UTC),
+    which both partitionings honor and pushed filters narrow further.
+    ``readStream`` also takes ``min.age.seconds`` (see bi5_stream).
     """
 
     @classmethod

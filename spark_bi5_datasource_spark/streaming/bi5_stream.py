@@ -7,17 +7,16 @@ streaming scan").  Micro-batch model:
 * offset = the set of files already processed, tracked as a sorted
   list in the offset JSON (hour files are immutable once written —
   Dukascopy trees are append-only, so set-difference is exact);
-* each micro-batch plans one partition per new file (same per-file
-  parallelism as the batch source) and reuses the batch codec and
-  Arrow batch builder;
-* dirty files follow the same silent-skip contract (A10);
-* the ``tickers``/``start``/``end`` prune options are honored when
-  listing, so the watch window is bounded the same way as the batch
-  reader's option pruning;
-* ``min.age.seconds`` (default 0) excludes files modified more
-  recently than the given age from an offset — protection against
-  ingesting a file mid-write (a truncated decode would otherwise be
-  final, since offsets never revisit a path).
+* each micro-batch plans one batch-source ``Bi5Partition`` per new
+  file and decodes it with the batch source's ``read_files``, so dirty
+  files follow the same silent-skip contract (A10);
+* options: the batch source's ``path``, ``digits`` and ``january``,
+  and its ``tickers``/``start``/``end`` prune (``FilePrune.files``
+  lists the watch window, as in the batch planner);
+* ``min.age.seconds`` (default 0), stream-only, excludes files
+  modified more recently than the given age from an offset —
+  protection against ingesting a file mid-write (a truncated decode
+  would otherwise be final, since offsets never revisit a path).
 
 Scale note: the offset carries file paths, so very deep histories
 should bound the watch window with ``start``/``end``/``tickers``.
@@ -28,19 +27,12 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass
 
-from pyspark.sql.datasource import DataSourceStreamReader, InputPartition
+from pyspark.sql.datasource import DataSourceStreamReader
 
-from ..sources.bi5_codec import decode_bi5_file, iter_bi5_files, ticks_record_batch
-from ..sources.bi5_datasource import FilePrune, bi5_options
+from ..sources.bi5_datasource import Bi5Partition, FilePrune, bi5_options, read_files
 
 __all__ = ["Bi5StreamReader", "stream_bi5_writer"]
-
-
-@dataclass
-class Bi5StreamPartition(InputPartition):
-    files: tuple[str, ...]
 
 
 class Bi5StreamReader(DataSourceStreamReader):
@@ -49,34 +41,29 @@ class Bi5StreamReader(DataSourceStreamReader):
         self.prune = FilePrune.from_options(options, self.january)
         self.min_age_s = float(options.get("min.age.seconds", "0"))
 
-    def _keep(self, fpath: str) -> bool:
-        if self.min_age_s > 0:
-            try:
-                if time.time() - os.path.getmtime(fpath) < self.min_age_s:
-                    return False  # possibly still being written
-            except OSError:
-                return False
-        return self.prune.keep(fpath)
+    def _settled(self, fpath: str) -> bool:
+        """False for a file modified within ``min.age.seconds``: it may
+        still be being written."""
+        if self.min_age_s <= 0:
+            return True
+        try:
+            return time.time() - os.path.getmtime(fpath) >= self.min_age_s
+        except OSError:
+            return False
 
     # offsets are {"files": [...]} — immutable-file set semantics
     def initialOffset(self) -> dict:
         return {"files": []}
 
     def latestOffset(self) -> dict:
-        return {"files": sorted(f for f in iter_bi5_files(self.path) if self._keep(f))}
+        return {"files": sorted(f for f in self.prune.files(self.path) if self._settled(f))}
 
     def partitions(self, start: dict, end: dict):
         new_files = sorted(set(end["files"]) - set(start["files"]))
-        if not new_files:
-            return [Bi5StreamPartition(files=())]
-        return [Bi5StreamPartition(files=(f,)) for f in new_files]
+        return [Bi5Partition((f,)) for f in new_files] or [Bi5Partition(())]
 
-    def read(self, partition: Bi5StreamPartition):
-        for fpath in partition.files:
-            cols = decode_bi5_file(fpath, self.digits, self.january)
-            if cols is None or len(cols["ts_us"]) == 0:
-                continue
-            yield ticks_record_batch(cols)
+    def read(self, partition: Bi5Partition):
+        return read_files(partition.files, self.digits, self.january)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are self-contained; nothing to clean up

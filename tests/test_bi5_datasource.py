@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import GreaterThan, In, LessThan
 
 from tests.conftest import REFERENCE_RESOURCES, reference_fixtures_available
 
@@ -105,6 +106,55 @@ class TestPruneOptions:
         # the EURUSD 15h and April files; 01h ends before start, USDJPY is out
         assert planned == listed
         assert [os.path.basename(f) for f in listed] == ["15h_ticks.bi5", "00h_ticks.bi5"]
+
+    @staticmethod
+    def kept_files(path, options, pushed) -> int:
+        from spark_bi5_datasource_spark.sources.bi5_datasource import Bi5Reader
+
+        reader = Bi5Reader({"path": path, "digits": "5", **options})
+        assert list(reader.pushFilters(pushed)) == pushed  # all left for Spark
+        return sum(len(p.files) for p in reader.partitions())
+
+    # Files (january=0): EURUSD 2019-12-31 01h and 15h, 2020-04-03 00h;
+    # USDJPY 2021-01-01 00h and 23h.
+    @pytest.mark.parametrize(
+        "option, pushed, kept",
+        [
+            # pushed In and the tickers option keep only their intersection
+            ({"tickers": "USDJPY"}, In(("ticker",), ("EURUSD", "USDJPY")), 2),
+            ({"tickers": "EURUSD,USDJPY"}, In(("ticker",), ("USDJPY", "GBPUSD")), 2),
+            ({"tickers": "EURUSD"}, In(("ticker",), ("USDJPY",)), 0),
+            # the later start bound wins, whichever side sets it
+            ({"start": "2020-06-01"}, GreaterThan(("ts",), dt.datetime(2019, 12, 31, 10)), 2),
+            ({"start": "2019-12-31T10:00"}, GreaterThan(("ts",), dt.datetime(2020, 6, 1)), 2),
+            # the earlier end bound wins, whichever side sets it
+            ({"end": "2020-06-01"}, LessThan(("ts",), dt.datetime(2019, 12, 31, 10)), 1),
+            ({"end": "2019-12-31T10:00"}, LessThan(("ts",), dt.datetime(2020, 6, 1)), 1),
+        ],
+    )
+    def test_pushed_filters_narrow_the_options(self, bi5_tree, option, pushed, kept):
+        assert self.kept_files(bi5_tree, {}, []) == 5
+        assert self.kept_files(bi5_tree, option, [pushed]) == kept
+
+    @pytest.mark.parametrize(
+        "options",
+        [
+            {"tickers": "EURUSD"},
+            {"end": "2019-01-01"},
+            {"tickers": "USDJPY", "start": "2020-06-01"},
+        ],
+    )
+    def test_subdir_and_file_partitioning_prune_alike(self, spark, bi5_tree, options):
+        def rows(partitioning):
+            df = read_bi5(
+                spark, bi5_tree, digits=DIGITS_EUR, partitioning=partitioning, **options
+            )
+            return df, sorted(df.collect())
+
+        _, by_file = rows("file")
+        subdir, by_subdir = rows("subdir")
+        assert by_subdir == by_file
+        assert subdir.rdd.getNumPartitions() == 2  # EURUSD/, USDJPY/
 
 
 # ---- dirty-input tolerance (T:178-186) ----

@@ -1425,10 +1425,10 @@ class TestOhlcRollup:
         assert merged == direct and len(direct) >= 2
 
     def test_null_ts_rows_dropped_on_both_paths(self, spark):
-        """The integer-bucket (batch default) and window() code paths
-        must return the same row set on data with null timestamps:
-        both drop them (window() via TimeWindowing's IsNotNull filter,
-        the integer path via an explicit where)."""
+        """The batch integer-bucket path must return the same row set
+        as the window() construct streaming inputs use, on data with
+        null timestamps: both drop them (window() via TimeWindowing's
+        IsNotNull filter, the integer path via an explicit where)."""
         from pyspark.sql import functions as F
 
         from spark_bi5_datasource_spark.functions.ohlc import ohlc_bars
@@ -1444,8 +1444,13 @@ class TestOhlcRollup:
         )
         fast = {(r.bar_start, r.ticker): (r.open, r.close, r.n_ticks)
                 for r in ohlc_bars(df, "1 minute").collect()}
-        slow = {(r.bar_start, r.ticker): (r.open, r.close, r.n_ticks)
-                for r in ohlc_bars(df, "1 minute", integer_buckets=False).collect()}
+        window_twin = df.groupBy(F.window("ts", "1 minute").alias("w"), "ticker").agg(
+            F.min_by("bid", "ts").alias("open"),
+            F.max_by("bid", "ts").alias("close"),
+            F.count("*").alias("n_ticks"),
+        )
+        slow = {(r.w.start, r.ticker): (r.open, r.close, r.n_ticks)
+                for r in window_twin.collect()}
         assert fast == slow
         assert all(k[0] is not None for k in fast)
         assert list(fast.values()) == [(1.0, 2.0, 2)]
