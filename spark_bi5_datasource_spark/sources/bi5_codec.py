@@ -153,9 +153,10 @@ def decode_bi5_bytes(raw: bytes, digits: int, hour_epoch_us: int) -> dict[str, n
     }
 
 
-def decode_bi5_file(path: str, digits: int, january: int = 0) -> dict[str, np.ndarray] | None:
-    """Decode one bi5 file → columns + ticker, or ``None`` when the file
-    must be silently skipped (A10 policy, DS24:149-186)."""
+def decode_bi5_file(path: str, digits: int, january: int = 0) -> dict[str, np.ndarray | str] | None:
+    """Decode one bi5 file → columns plus ``ticker``, the path's ticker
+    as one ``str`` (constant per file), or ``None`` when the file must
+    be silently skipped (A10 policy, DS24:149-186)."""
     try:
         meta = parse_bi5_path(path, january)
         with open(path, "rb") as f:
@@ -163,7 +164,7 @@ def decode_bi5_file(path: str, digits: int, january: int = 0) -> dict[str, np.nd
         cols = decode_bi5_bytes(raw, digits, meta.hour_epoch_us)
     except Exception:
         return None
-    cols["ticker"] = np.full(len(cols["ts_us"]), meta.ticker, dtype=object)
+    cols["ticker"] = meta.ticker
     return cols
 
 
@@ -184,14 +185,16 @@ def arrow_ticks_schema():
     )
 
 
-def ticks_record_batch(cols: dict[str, np.ndarray]):
-    """Build the Arrow RecordBatch both readers yield."""
+def ticks_record_batch(cols: dict[str, np.ndarray | str]):
+    """Build the Arrow RecordBatch both readers yield.  The constant
+    ticker column is repeated in Arrow, never built as a Python object
+    array."""
     import pyarrow as pa
 
     schema = arrow_ticks_schema()
     return pa.RecordBatch.from_arrays(
         [
-            pa.array(cols["ticker"], type=pa.string()),
+            pa.repeat(pa.scalar(cols["ticker"], pa.string()), len(cols["ts_us"])),
             pa.array(cols["ts_us"], type=pa.timestamp("us", tz="UTC")),
             pa.array(cols["ask"], type=pa.float64()),
             pa.array(cols["bid"], type=pa.float64()),

@@ -7,10 +7,13 @@ salvania/BI5DataSource.scala, "DS24") Spark-first:
   with the exact error strings (DS24:34-47, asserted by the reference
   tests T:164-214), month-0 path convention, silent dirty-file skip;
 * scale upgrades over the reference:
-  - default **one partition per .bi5 file** (reference: one per
-    immediate subdirectory, DS24:70-79, which is skew-prone); the
-    ``partitioning=subdir`` option restores reference semantics for
-    exact test parity including ``df.rdd.getNumPartitions`` (T:218-228);
+  - default **packed partitions**: the kept files, in listing order,
+    cut into contiguous runs of equal file count, one per core of this
+    host (``pack_files``).  The reference plans one per immediate
+    subdirectory (DS24:70-79), which is skew-prone; one per file would pay the Python-datasource task cost
+    once per hour file.  The ``partitioning=subdir`` option restores
+    reference semantics for exact test parity including
+    ``df.rdd.getNumPartitions`` (T:218-228);
   - **filter pushdown** via ``pushFilters`` (new in Spark 4.1): the
     path encodes ``ticker`` and the ``ts`` hour, so ticker equality/IN
     and ts range predicates prune the driver-side file list before any
@@ -80,10 +83,35 @@ BI5_SCHEMA = StructType(
 
 @dataclass
 class Bi5Partition(InputPartition):
-    """One scan task: the ``.bi5`` files it decodes (file mode → one;
-    subdir mode → every kept file under one top-level entry)."""
+    """One scan task: the ``.bi5`` files it decodes, in order (file mode
+    and streaming → one contiguous run from ``pack_files``; subdir mode →
+    every kept file under one top-level entry)."""
 
     files: tuple[str, ...]
+
+
+def _cores() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def pack_files(files: Sequence[str]) -> list[Bi5Partition]:
+    """Cut ``files`` into ``min(len(files), cores)`` contiguous runs whose
+    file counts differ by at most one.  ``cores`` is this host's CPU
+    affinity, which matches the session's task slots for a ``local[*]``
+    style session; it is not Spark's ``defaultParallelism``.  Hour files
+    are tens of KB, so a run's cost is its file count.  Runs keep the
+    listing order, so the scan yields the same rows in the same order as
+    one partition per file.  An empty list plans one empty partition, so
+    ``count()`` still runs a no-op task like the reference's empty-walk
+    reader."""
+    if not files:
+        return [Bi5Partition(())]
+    n = min(len(files), _cores())
+    cuts = [len(files) * k // n for k in range(n + 1)]
+    return [Bi5Partition(tuple(files[a:b])) for a, b in zip(cuts, cuts[1:])]
 
 
 def read_files(files: Iterable[str], digits: int, january: int) -> Iterator:
@@ -248,22 +276,17 @@ class Bi5Reader(DataSourceReader):
 
     # -- planning ------------------------------------------------------
     def partitions(self) -> Sequence[Bi5Partition]:
-        if self.partitioning == "subdir":
+        if self.partitioning == "subdir" and os.path.isdir(self.path):
             # Reference parity (DS24:68-79): one partition per immediate
-            # directory entry, even one with no kept file; single file →
-            # one partition.
-            if os.path.isdir(self.path):
-                roots = [os.path.join(self.path, e) for e in sorted(os.listdir(self.path))]
-            else:
-                roots = [self.path]
-            parts = [Bi5Partition(tuple(self.prune.files(r))) for r in roots]
-        else:
-            # Scale path: one partition per kept file.
-            parts = [Bi5Partition((f,)) for f in self.prune.files(self.path)]
-        # Zero partitions is legal but loses schema-only queries' task
-        # metrics parity; keep an empty partition so count()==0 still
-        # runs a (no-op) task like the reference's empty-walk reader.
-        return parts or [Bi5Partition(())]
+            # directory entry, even one with no kept file.  A single-file
+            # path or an empty directory plans as in file mode.
+            entries = sorted(os.listdir(self.path))
+            if entries:
+                return [
+                    Bi5Partition(tuple(self.prune.files(os.path.join(self.path, e))))
+                    for e in entries
+                ]
+        return pack_files(self.prune.files(self.path))
 
     # -- execution -----------------------------------------------------
     def read(self, partition: Bi5Partition):
@@ -274,8 +297,9 @@ class Bi5DataSource(DataSource):
     """``spark.read.format("bi5")`` — Dukascopy tick files.
 
     Options: ``digits`` (required, int ≥ 0), ``january`` (0/1, default
-    0), ``partitioning`` (``file``, the default: one partition per file;
-    ``subdir``: one per top-level directory entry, as the reference),
+    0), ``partitioning`` (``file``, the default: the kept files packed
+    into contiguous runs of equal file count, one per core of this host; ``subdir``: one
+    per top-level directory entry, as the reference),
     and the driver-side prune options ``tickers`` (comma-separated),
     ``start`` and ``end`` (inclusive ISO-8601 instants, naive = UTC),
     which both partitionings honor and pushed filters narrow further.

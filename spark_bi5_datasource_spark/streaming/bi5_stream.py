@@ -7,9 +7,10 @@ streaming scan").  Micro-batch model:
 * offset = the set of files already processed, tracked as a sorted
   list in the offset JSON (hour files are immutable once written —
   Dukascopy trees are append-only, so set-difference is exact);
-* each micro-batch plans one batch-source ``Bi5Partition`` per new
-  file and decodes it with the batch source's ``read_files``, so dirty
-  files follow the same silent-skip contract (A10);
+* each micro-batch packs its new files with the batch source's
+  ``pack_files`` (contiguous runs, one ``Bi5Partition`` per core)
+  and decodes them with its ``read_files``, so dirty files follow the
+  same silent-skip contract (A10);
 * options: the batch source's ``path``, ``digits`` and ``january``,
   and its ``tickers``/``start``/``end`` prune (``FilePrune.files``
   lists the watch window, as in the batch planner);
@@ -30,7 +31,13 @@ import time
 
 from pyspark.sql.datasource import DataSourceStreamReader
 
-from ..sources.bi5_datasource import Bi5Partition, FilePrune, bi5_options, read_files
+from ..sources.bi5_datasource import (
+    Bi5Partition,
+    FilePrune,
+    bi5_options,
+    pack_files,
+    read_files,
+)
 
 __all__ = ["Bi5StreamReader", "stream_bi5_writer"]
 
@@ -59,8 +66,7 @@ class Bi5StreamReader(DataSourceStreamReader):
         return {"files": sorted(f for f in self.prune.files(self.path) if self._settled(f))}
 
     def partitions(self, start: dict, end: dict):
-        new_files = sorted(set(end["files"]) - set(start["files"]))
-        return [Bi5Partition((f,)) for f in new_files] or [Bi5Partition(())]
+        return pack_files(sorted(set(end["files"]) - set(start["files"])))
 
     def read(self, partition: Bi5Partition):
         return read_files(partition.files, self.digits, self.january)

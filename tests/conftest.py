@@ -95,6 +95,24 @@ def bi5_tree(tmp_path):
     return str(root)
 
 
+@pytest.fixture()
+def bi5_hours_tree(tmp_path):
+    """Twelve valid hour files over two tickers (month-0 Jan 2 2020,
+    hours 0-5 each), with 1-6 ticks apiece: more files than a small
+    box has cores, so packed scans put several files in one task."""
+    root = tmp_path / "hours"
+    for t, ticker in enumerate(("EURUSD", "GBPUSD")):
+        for hh in range(6):
+            write_bi5(
+                str(root / ticker / f"2020/0/2/{hh:02d}h_ticks.bi5"),
+                [
+                    (k * 600_000 + t, 110_000 + 10 * hh + k, 109_990 + k, 1.0 + k, 0.5 * t)
+                    for k in range(hh + 1)
+                ],
+            )
+    return str(root)
+
+
 def reference_fixtures_available() -> bool:
     return os.path.isdir(REFERENCE_RESOURCES)
 

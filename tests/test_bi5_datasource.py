@@ -289,6 +289,67 @@ class TestPushdownPruning:
         assert df.count() == 2
 
 
+# ---- file packing: one scan partition per core ----
+
+
+def cores() -> int:
+    return len(os.sched_getaffinity(0))
+
+
+class TestPackFiles:
+    @staticmethod
+    def planned(path, **options):
+        from spark_bi5_datasource_spark.sources.bi5_datasource import Bi5Reader
+
+        return Bi5Reader({"path": path, "digits": "5", **options}).partitions()
+
+    def test_runs_cover_the_listing_in_order(self, bi5_tree, bi5_hours_tree):
+        from spark_bi5_datasource_spark.sources.bi5_datasource import FilePrune
+
+        for root in (bi5_tree, bi5_hours_tree):
+            parts = self.planned(root)
+            assert [f for p in parts for f in p.files] == FilePrune(0).files(root)
+            assert all(p.files for p in parts)
+
+    def test_small_tree_plans_one_partition_per_core(self, bi5_tree, bi5_hours_tree):
+        assert len(self.planned(bi5_tree)) == min(5, cores())
+        assert len(self.planned(bi5_hours_tree)) == min(12, cores())
+
+    def test_runs_differ_by_at_most_one_file(self):
+        from spark_bi5_datasource_spark.sources.bi5_datasource import pack_files
+
+        for count in (1, cores() - 1, cores(), cores() + 1, 3 * cores() + 2):
+            if count < 1:
+                continue
+            files = [f"{i:03d}.bi5" for i in range(count)]
+            sizes = [len(p.files) for p in pack_files(files)]
+            assert len(sizes) == min(count, cores())
+            assert max(sizes) - min(sizes) <= 1 and min(sizes) >= 1
+            assert [f for p in pack_files(files) for f in p.files] == files
+
+    def test_empty_listing_plans_one_empty_partition(self, bi5_tree):
+        from spark_bi5_datasource_spark.sources.bi5_datasource import Bi5Partition, pack_files
+
+        assert pack_files([]) == [Bi5Partition(())]
+        assert self.planned(bi5_tree, tickers="NOPE") == [Bi5Partition(())]
+
+    def test_packed_scan_matches_file_by_file_decode(self, spark, bi5_hours_tree):
+        from spark_bi5_datasource_spark.sources.bi5_codec import decode_bi5_file, iter_bi5_files
+
+        want = []
+        for f in iter_bi5_files(bi5_hours_tree):
+            c = decode_bi5_file(f, DIGITS_EUR)
+            cols = [c["ts_us"], c["ask"], c["bid"], c["ask_volume"], c["bid_volume"]]
+            want += [(c["ticker"], *(v.item() for v in vals)) for vals in zip(*cols)]
+        df = read_bi5(spark, bi5_hours_tree, digits=DIGITS_EUR)
+        assert df.rdd.getNumPartitions() == min(12, cores())
+        got = df.select(
+            "ticker", F.unix_micros("ts"), "ask", "bid", "ask_volume", "bid_volume"
+        ).collect()
+        assert len(want) == 42
+        assert [tuple(r) for r in got] == want
+
+
 # ---- reference-resource golden tests (skip when tree absent) ----
 
 

@@ -4,6 +4,7 @@ filters un-pushing, Python sneaking into relational hot paths)."""
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -114,13 +115,41 @@ def test_text_queries_tokenize_once(spark):
 
 def test_bi5_scan_prunes_files(spark, bi5_tree):
     import pyspark.sql.functions as F
+    from pyspark.sql.datasource import EqualTo
 
+    from spark_bi5_datasource_spark.sources.bi5_datasource import Bi5Reader
+
+    # planned files, not partitions: packing caps partitions at the core count
+    def planned(filters):
+        reader = Bi5Reader({"path": bi5_tree, "digits": "5"})
+        list(reader.pushFilters(filters))
+        return sum(len(p.files) for p in reader.partitions())
+
+    assert planned([EqualTo(("ticker",), "EURUSD")]) < planned([])
     df = (
         spark.read.format("bi5").option("digits", 5).load(bi5_tree)
         .filter(F.col("ticker") == "EURUSD")
     )
-    full = spark.read.format("bi5").option("digits", 5).load(bi5_tree)
-    assert df.rdd.getNumPartitions() < full.rdd.getNumPartitions()
+    assert df.count() == 5
+
+
+def test_bi5_pushdown_plans_fewer_partitions(spark, bi5_hours_tree):
+    """Spark pushes the filter into the reader: one ticker-hour of the
+    12-file tree plans one partition, the full read one per core."""
+    import pyspark.sql.functions as F
+
+    cores = len(os.sched_getaffinity(0))
+    if cores == 1:
+        pytest.skip("one core: the unfiltered read also plans one partition")
+    df = spark.read.format("bi5").option("digits", 5).load(bi5_hours_tree)
+    hour = df.filter(
+        (F.col("ticker") == "GBPUSD")
+        & (F.col("ts") >= "2020-01-02 03:00:00")
+        & (F.col("ts") <= "2020-01-02 03:59:59")
+    )
+    assert df.rdd.getNumPartitions() == min(12, cores)
+    assert hour.rdd.getNumPartitions() == 1
+    assert hour.count() == 4
 
 
 def test_bi5_isin_pushdown_prunes(spark, bi5_tree):

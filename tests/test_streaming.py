@@ -329,6 +329,29 @@ class TestBi5Streaming:
         assert sorted(r.ask for r in got) == [1.0, 1.0001, 1.0002]
 
 
+def test_bi5_stream_backfill_packs_like_the_batch_reader(bi5_hours_tree):
+    """The first micro-batch over a backlog packs its files into at most
+    one partition per core and yields the batch reader's rows.  The
+    offset lists files sorted, the batch walk in directory order, so rows
+    are compared sorted."""
+    import pyarrow as pa
+
+    from spark_bi5_datasource_spark.sources.bi5_datasource import Bi5Reader
+    from spark_bi5_datasource_spark.streaming.bi5_stream import Bi5StreamReader
+
+    def rows(reader, parts):
+        t = pa.Table.from_batches(b for p in parts for b in reader.read(p))
+        return t.sort_by([("ticker", "ascending"), ("ts", "ascending")])
+
+    opts = {"path": bi5_hours_tree, "digits": "5"}
+    stream = Bi5StreamReader(opts)
+    parts = stream.partitions(stream.initialOffset(), stream.latestOffset())
+    assert sum(len(p.files) for p in parts) == 12
+    assert len(parts) <= len(os.sched_getaffinity(0))
+    batch = Bi5Reader(opts)
+    assert rows(stream, parts).equals(rows(batch, batch.partitions()))
+
+
 def test_sliding_windows(spark, event_stream_dir, tmp_path):
     from spark_bi5_datasource_spark.streaming import sliding_value_sums
 
